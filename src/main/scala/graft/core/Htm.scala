@@ -88,8 +88,6 @@ object Htm {
     xyzToSidScalar(math.cos(la) * math.cos(lo), math.cos(la) * math.sin(lo), math.sin(la), level)
   }
 
-  def xyzToSid(p: Array[Double], level: Int): Long = xyzToSidScalar(p(0), p(1), p(2), level)
-
   /** (cross(a,b))·p with the exact operation order of the array-based
     * cross/dot helpers — the descent is calibrated bit-for-bit. */
   @inline private def sideTest(ax: Double, ay: Double, az: Double,

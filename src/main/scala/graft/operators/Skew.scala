@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Sid
 import graft.functions.StareFunctions._
@@ -43,6 +43,36 @@ object Skew {
                                minLeftLevel: Int = Sid.MaxLevel,
                                allCells: Array[Long] = Array.emptyLongArray)
 
+  /** Deepest split below a hot cell. */
+  private final val MaxExtraLevels = 6
+
+  private def confOr[A](spark: SparkSession, key: String, default: A)(parse: String => A): A =
+    try parse(spark.conf.get(key, default.toString).trim) catch { case _: Exception => default }
+
+  /** The session values every join-build choice reads, parsed once: the
+    * broadcast threshold (bytes; <= 0 disables broadcasting), the
+    * shuffle partition count, and the per-partition byte cap on a
+    * shuffled-hash build (spark.graft.join.shjMaxBuildBytesPerPartition). */
+  private[operators] final case class JoinConf(broadcastBytes: Long, partitions: Int,
+                                               shjBytesPerPartition: Long) {
+    def broadcasts(bytes: Long): Boolean = broadcastBytes > 0 && bytes <= broadcastBytes
+    /** The build for a side of `bytes`: broadcast under the threshold,
+      * shuffled hash when one partition's share fits the SHJ cap, else
+      * sort-merge. */
+    def build(bytes: Long): Build =
+      if (broadcasts(bytes)) Build.Broadcast
+      else if (bytes / math.max(1, partitions) <= shjBytesPerPartition) Build.ShuffleHash
+      else Build.SortMerge
+  }
+  private[operators] object JoinConf {
+    def apply(spark: SparkSession): JoinConf = JoinConf(
+      confOr(spark, "spark.sql.autoBroadcastJoinThreshold", 10485760L)(raw =>
+        if (raw.startsWith("-")) -1L
+        else org.apache.spark.network.util.JavaUtils.byteStringAsBytes(raw)),
+      confOr(spark, "spark.sql.shuffle.partitions", 200)(_.toInt),
+      confOr(spark, "spark.graft.join.shjMaxBuildBytesPerPartition", 64L * 1024 * 1024)(_.toLong))
+  }
+
   /** Estimate per-cell point counts from a sample of the left side and
     * split cells whose projected population exceeds `maxRowsPerCell`.
     *
@@ -65,11 +95,7 @@ object Skew {
   def splitHotCellsWithSpec(left: DataFrame, leftSid: String,
                             right: DataFrame, rightSids: String,
                             maxRowsPerCell: Long, sampleFraction: Double = 0.01,
-                            maxExtraLevels: Int = 6,
-                            knownMinLeftLevel: Option[Int] = None,
-                            wallClockGate: Boolean = true,
-                            assumedReduceRowsPerSec: Double = Double.NaN,
-                            assumedFixedOverheadSec: Double = Double.NaN): SplitResult = {
+                            knownMinLeftLevel: Option[Int] = None): SplitResult = {
     // per-cell sample counts (cells normalized at own level). The
     // groupBy also yields the exploded (row, cell) PAIR count — the
     // quantity the join actually shuffles/broadcasts (a distinct-cell
@@ -109,17 +135,12 @@ object Skew {
       System.err.println(s"[skew] split skipped: no projected win — $reason")
       SplitResult(right, Seq.empty, levels, Some(reason), minLeftLevel, cells)
     }
-    val conf = left.sparkSession.conf
+    val spark = left.sparkSession
+    val joinConf = JoinConf(spark)
     // (1) a cover-key side under the broadcast threshold never shuffles
     // the point side by key: there is no reducer to melt. ~32 B per
     // exploded (rid, key) pair mirrors Catalyst's sizing order.
-    val bcastThreshold = {
-      val raw = conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760").trim
-      try { if (raw.startsWith("-")) -1L
-            else org.apache.spark.network.util.JavaUtils.byteStringAsBytes(raw) }
-      catch { case _: Exception => 10485760L }
-    }
-    if (bcastThreshold > 0 && rightPairCount * 32 <= bcastThreshold)
+    if (joinConf.broadcasts(rightPairCount * 32))
       return skip(s"cover side (~$rightPairCount exploded (row, cell) pairs) fits the " +
         "broadcast threshold; the join has no per-key shuffle")
     // (2) the hottest cell must exceed the per-cell cap AND dominate a
@@ -127,8 +148,7 @@ object Skew {
     // within ~2x the average reducer load doesn't bound the stage.
     val estHot = counts.valuesIterator.maxOption.getOrElse(0L) * scale
     val estTotal = counts.valuesIterator.sum * scale
-    val shufflePartitions =
-      try conf.get("spark.sql.shuffle.partitions", "200").toInt catch { case _: Exception => 200 }
+    val shufflePartitions = joinConf.partitions
     val fairShare = estTotal / math.max(1, shufflePartitions)
     if (estHot <= maxRowsPerCell)
       return skip(f"hottest cell ~${estHot}%.0f rows <= maxRowsPerCell=$maxRowsPerCell")
@@ -142,31 +162,22 @@ object Skew {
     // gated key derivation — ~4 s measured at the r3 sub-threshold bench,
     // where the split won max-task but tied/lost wall). Projected saving
     // = the melt the hot reducer carries beyond its fair share, at the
-    // measured reducer sort rate (~2M rows/s, BENCH.md). Mechanism/unit
-    // tests and callers that want max-task balance regardless of wall
-    // clock pass wallClockGate = false. The rate/overhead constants are
-    // host-dependent (ours come from the bench box, BENCH.md): a
-    // deployment with slower reducers sets the conf keys below so an
-    // explicit splitHot request doesn't silently no-op where a
-    // sub-4s-projected melt is in fact material (ADVICE r5).
-    if (wallClockGate) {
-      def confDouble(key: String, fallback: Double): Double =
-        try conf.get(key, fallback.toString).toDouble catch { case _: Exception => fallback }
-      val reduceRowsPerSec =
-        if (assumedReduceRowsPerSec.isNaN)
-          confDouble("spark.graft.skew.reduceRowsPerSec", 2e6)
-        else assumedReduceRowsPerSec
-      val fixedOverheadSec =
-        if (assumedFixedOverheadSec.isNaN)
-          confDouble("spark.graft.skew.splitOverheadSec", 4.0)
-        else assumedFixedOverheadSec
-      val projectedSaveSec = (estHot - fairShare) / reduceRowsPerSec
-      if (projectedSaveSec <= fixedOverheadSec)
-        return skip(f"projected wall-clock saving ~$projectedSaveSec%.1f s " +
-          f"((hot ~${estHot}%.0f - fair ~$fairShare%.0f rows) / " +
-          f"${reduceRowsPerSec}%.0f rows/s) does not cover the " +
-          f"~$fixedOverheadSec%.1f s fixed split overhead")
-    }
+    // measured reducer sort rate (~2M rows/s, BENCH.md). The
+    // rate/overhead constants are host-dependent (ours come from the
+    // bench box, BENCH.md): a deployment with slower reducers sets the
+    // conf keys below so an explicit splitHot request doesn't silently
+    // no-op where a sub-4s-projected melt is in fact material (ADVICE
+    // r5). Mechanism tests that want max-task balance regardless of wall
+    // clock set splitOverheadSec to 0: gate (2) already guarantees a
+    // positive projected saving.
+    val reduceRowsPerSec = confOr(spark, "spark.graft.skew.reduceRowsPerSec", 2e6)(_.toDouble)
+    val fixedOverheadSec = confOr(spark, "spark.graft.skew.splitOverheadSec", 4.0)(_.toDouble)
+    val projectedSaveSec = (estHot - fairShare) / reduceRowsPerSec
+    if (projectedSaveSec <= fixedOverheadSec)
+      return skip(f"projected wall-clock saving ~$projectedSaveSec%.1f s " +
+        f"((hot ~${estHot}%.0f - fair ~$fairShare%.0f rows) / " +
+        f"${reduceRowsPerSec}%.0f rows/s) does not cover the " +
+        f"~$fixedOverheadSec%.1f s fixed split overhead")
 
     // Phase B: descendant counts of the HOT cells only, from the same
     // sample — one more narrow job over hot-membership rows. The
@@ -177,7 +188,7 @@ object Skew {
       val hotByLevel = hotCells.groupBy(Sid.level)
       val candLevels = hotCells.flatMap { c =>
         val l = Sid.level(c)
-        (l + 1) to math.min(l + maxExtraLevels, math.min(minLeftLevel, Sid.MaxLevel))
+        (l + 1) to math.min(l + MaxExtraLevels, math.min(minLeftLevel, Sid.MaxLevel))
       }.distinct.sorted
       if (hotCells.isEmpty || candLevels.isEmpty) Map.empty
       else {
@@ -222,7 +233,7 @@ object Skew {
     // right-side rows (≤ 4^depth tiny cells per parent) are free.
     def uniformChildren(cell: Long): Seq[Long] = {
       val l = Sid.level(cell)
-      val maxLv = math.min(l + maxExtraLevels, math.min(minLeftLevel, Sid.MaxLevel))
+      val maxLv = math.min(l + MaxExtraLevels, math.min(minLeftLevel, Sid.MaxLevel))
       if (counts.getOrElse(cell, 0L) * scale <= maxRowsPerCell || maxLv <= l) Seq(cell)
       else {
         val lv = ((l + 1) to maxLv).find { v =>
@@ -250,37 +261,65 @@ object Skew {
       minLeftLevel = minLeftLevel, allCells = cells)
   }
 
-  /** Back-compat wrapper returning only the rewritten cover frame.
-    * Defaults forward to splitHotCellsWithSpec's (an explicit shallower
-    * maxExtraLevels here silently under-split for wrapper callers). */
-  def splitHotCells(left: DataFrame, leftSid: String,
-                    right: DataFrame, rightSids: String,
-                    maxRowsPerCell: Long, sampleFraction: Double = 0.01,
-                    maxExtraLevels: Int = 6,
-                    wallClockGate: Boolean = true): DataFrame =
-    splitHotCellsWithSpec(left, leftSid, right, rightSids,
-      maxRowsPerCell, sampleFraction, maxExtraLevels,
-      wallClockGate = wallClockGate).right
+  /** shuffleJoin's two output shapes, each with its builds. */
+  private sealed trait Shape
+  /** Full right rows on the keyed side (keys ⋈ rows, built by `rows`):
+    * the big side crosses one exchange, or none when broadcast, and the
+    * join output is final. Inner joins explode every candidate key; a
+    * left join needs exactly one key per row. */
+  private final case class FullRow(build: Build, rows: Build) extends Shape
+  /** (row id, key) pairs joined to the left, then the right rows
+    * joined back by row id (StareJoin.assemble). */
+  private final case class Pairs(keys: Build, rows: Build) extends Shape
 
-  /** Shuffle-path spatial join for cover sides too large to broadcast:
-    * sort-merge/shuffled-hash equi-join on the prefix keys with AQE skew
-    * splitting enabled, optionally after exact hot-cell splitting.
-    * Same pair semantics and output contract (suffixes, `key_right`,
-    * column order) as StareJoin.pointJoin, for how = inner | left.
+  /** Picks the output shape and every build from exact sizes: the keyed
+    * right rows, the right rows and their measured width. The first fit
+    * wins:
+    *  1. the full-row shape, when the keyed full rows broadcast;
+    *  2. the pair shape, when both of its builds broadcast;
+    *  3. the full-row shape, when it fits the SHJ cap per partition;
+    *  4. otherwise the pair shape, each build sized on its own (sort-merge
+    *     over the caps).
+    * A multi-key left join only has the pair shape: a row exploded to N
+    * candidate keys would left-join into one spurious all-null row per
+    * non-matching key. */
+  private def chooseShape(conf: JoinConf, keyedRows: Long, rightRows: Long, rowBytes: Long,
+                          fullRowOk: Boolean): Shape = {
+    def bytes(rows: Long, width: Long): Long =
+      if (rows > Long.MaxValue / math.max(1L, width)) Long.MaxValue else rows * width
+    val full = conf.build(bytes(keyedRows, rowBytes))
+    val pairs = Pairs(conf.build(bytes(keyedRows, 32L)), conf.build(bytes(rightRows, rowBytes)))
+    if (fullRowOk && full == Build.Broadcast) FullRow(full, pairs.rows)
+    else if (pairs.keys == Build.Broadcast && pairs.rows == Build.Broadcast) pairs
+    else if (fullRowOk && full == Build.ShuffleHash) FullRow(full, pairs.rows)
+    else pairs
+  }
+
+  /** Shuffle-path spatial join for cover sides too large to broadcast
+    * whole: a prefix-key equi-join with AQE skew splitting, optionally
+    * after exact hot-cell splitting. Same pair semantics and output
+    * contract (suffixes, `key_right`, column order) as
+    * StareJoin.pointJoin, for how = inner | left.
     *
-    * Row ids come from deterministic zipWithIndex (StareJoin.withStableId)
+    * Keys: every cover cell keyed at its own level, rebased to one
+    * uniform level when the expansion budget allows, plus gated split
+    * levels. Two output shapes, picked with every build by
+    * `chooseShape` from exact sizes: the full-row keyed join, or the
+    * (row id, key) pairs plus a join-back by row id.
+    *
+    * Row ids come from StareJoin.withStableId (packed, deterministic)
     * instead of persist + monotonically_increasing_id: nothing stays
     * cached after the query completes. */
   def shuffleJoin(left: DataFrame, leftSid: String, right: DataFrame, rightSids: String,
                   splitHot: Option[Long] = None, how: String = "inner",
-                  knownMinLeftLevel: Option[Int] = None,
-                  wallClockGate: Boolean = true): DataFrame = {
+                  knownMinLeftLevel: Option[Int] = None): DataFrame = {
+    val joinType = StareJoin.checkHow(how)
     // ids first, split-rewrite second: the assembled output carries the
     // ORIGINAL cover rows; only the join-key derivation sees split cells
     val rightRows = StareJoin.withStableId(right, "key_right")
     val splitRes = splitHot
       .map(t => splitHotCellsWithSpec(left, leftSid, rightRows, rightSids, t,
-        knownMinLeftLevel = knownMinLeftLevel, wallClockGate = wallClockGate))
+        knownMinLeftLevel = knownMinLeftLevel))
     val rKeySource = splitRes.map(_.right).getOrElse(rightRows)
     // did the rewrite actually run, or did the cost gate skip it?
     val splitApplied = splitRes.exists(_.skipReason.isEmpty)
@@ -371,65 +410,24 @@ object Skew {
           if (Sid.level(c) < target) Sid.expandToLevel(Array(c), target) else Array(c))
         rightKeyed.withColumn("__rk", explode(rebase(col("__rk"))))
       }
-    // ---- join-strategy choice (r6, guide §3.1): the keyed right side
-    // is (rid, key) pairs whose EXACT row count we already hold
-    // (levelHist + the rebase expansion), but its lineage passes
-    // through withStableId's RDD round trip, which erases size stats —
-    // Catalyst then plans EVERY join here as a sort-merge join, even
-    // for an 8-row cover table (measured: 7 SMJs in the q43 plan), and
-    // at bench scale the 24M-row point side pays a full sort. Decide
-    // deliberately from the known count: broadcast when the keyed side
-    // fits the session's broadcast threshold (the left side is then
-    // never shuffled at all); otherwise force a shuffled-hash join
-    // (build = the small keyed side) so the big side streams instead
-    // of sorting; fall back to sort-merge only when the per-partition
-    // build could be large (conf spark.graft.join.shjMaxBuildBytesPerPartition).
+    // ---- sizes for the shape and build choice (r6, guide §3.1): the
+    // keyed right side's EXACT row count is already known (levelHist +
+    // the rebase expansion), but its lineage passes through
+    // withStableId's RDD round trip, which erases size stats — Catalyst
+    // would plan EVERY join here as a sort-merge join, even for an 8-row
+    // cover table (measured: 7 SMJs in the q43 plan). The right rows'
+    // width comes from one bounded probe; their count is exact under the
+    // probe size and otherwise bounded by the keyed pair count (every
+    // non-empty cover row emits ≥ 1 pair; empty-cover rows are assumed
+    // rare — they carry no join work).
     val keyedRightRows: Long =
       if (!rebased) levelHist.valuesIterator.sum
       else rebaseCost + levelHist.iterator.collect { case (l, n) if l >= target => n }.sum
-    val estKeyedBytes = keyedRightRows * 32L // (rid, key) pair, Catalyst-order sizing
-    val bcastThreshold = {
-      val raw = left.sparkSession.conf
-        .get("spark.sql.autoBroadcastJoinThreshold", "10485760").trim
-      try { if (raw.startsWith("-")) -1L
-            else org.apache.spark.network.util.JavaUtils.byteStringAsBytes(raw) }
-      catch { case _: Exception => 10485760L }
-    }
-    val shufflePartitions =
-      try left.sparkSession.conf.get("spark.sql.shuffle.partitions", "200").toInt
-      catch { case _: Exception => 200 }
-    val shjBuildCap = {
-      val raw = left.sparkSession.conf
-        .get("spark.graft.join.shjMaxBuildBytesPerPartition", (64L * 1024 * 1024).toString)
-      try raw.toLong catch { case _: Exception => 64L * 1024 * 1024 }
-    }
-    val rightForKeyJoin =
-      if (bcastThreshold > 0 && estKeyedBytes <= bcastThreshold)
-        org.apache.spark.sql.functions.broadcast(rightKeyedFinal)
-      else if (estKeyedBytes / math.max(1, shufflePartitions) <= shjBuildCap)
-        rightKeyedFinal.hint("shuffle_hash")
-      else rightKeyedFinal // sort-merge: spills gracefully for huge covers
-    // The assemble join-back (joined ⋈ rightRows on the row id) sees the
-    // same stats-free lineage, so without a decision here it sort-merges
-    // — at the 24M-row shuffle bench that sort of the JOINED output was
-    // the single largest remaining cost. Size the right ROWS (payload
-    // included) from one bounded probe: row count is bounded by the
-    // keyed pair count (every non-empty cover row emits ≥ 1 pair;
-    // empty-cover rows are assumed rare — they carry no join work).
-    // Strategy honors the session broadcast threshold (the skew bench
-    // disables broadcasting precisely to model a beyond-broadcast cover
-    // side), falling back to shuffled-hash under the build cap.
-    val assembleProbeN = 4096
-    val rightProbe = rightRows.limit(assembleProbeN + 1).collect()
-    val rowBytesEst = StareJoin.approxRowBytes(rightProbe)
-    val estRightRowsBytes =
-      if (rightProbe.length <= assembleProbeN) rowBytesEst * rightProbe.length
-      else rowBytesEst * math.max(keyedRightRows, rightProbe.length)
-    val (assembleRight, assembleBroadcast) =
-      if (bcastThreshold > 0 && estRightRowsBytes <= bcastThreshold) (rightRows, true)
-      else if (estRightRowsBytes / math.max(1, shufflePartitions) <= shjBuildCap)
-        (rightRows.hint("shuffle_hash"), false)
-      else (rightRows, false)
+    val probeN = 4096
+    val rightProbe = rightRows.limit(probeN + 1).collect()
+    val rightRowCount: Long =
+      if (rightProbe.length <= probeN) rightProbe.length
+      else math.max(keyedRightRows, rightProbe.length.toLong)
     // base levels probed unconditionally; split-child levels already in
     // the base set are matched by the base key (no gated duplicate — a
     // duplicate key value would double pairs); levels introduced ONLY
@@ -487,7 +485,10 @@ object Skew {
         s"suppress=${suppressByLevel.map { case (l, ps) => s"L$l:${ps.size}" }.mkString(",")} " +
         s"levelHist=${levelHist.toSeq.sorted.mkString(",")}")
     }
-    def keyExprsFor(sidCol: Column): Seq[Column] = {
+    // candidate keys of a left row: one per base level, then the gated
+    // split levels
+    val keys: Seq[Column] = {
+      val sidCol = col(leftSid)
       val base = baseLevels.toSeq.map { lv =>
         val k = stareClearTo(sidCol, lv)
         var cond = stareLevel(sidCol) >= lv
@@ -507,99 +508,47 @@ object Skew {
       }
       base ++ gated
     }
-    def keyedLeft(l: DataFrame): DataFrame =
-      l.withColumn("__lk", explode(filter(array(keyExprsFor(col(leftSid)): _*), c => c.isNotNull)))
+    val allKeys = explode(filter(array(keys: _*), c => c.isNotNull))
+    val keyMatch = StareJoin.mixKey(col("__lk")) === StareJoin.mixKey(col("__rk"))
     // AQE's skew-join splitter still handles residual imbalance on the
-    // non-broadcast strategies
-    how match {
-      case "inner" if !assembleBroadcast &&
-        estRightRowsBytes / math.max(1, shufflePartitions) <= shjBuildCap =>
-        // Full-row keyed right (r6, guide §2.3/§8): when the join-back
-        // cannot broadcast, assembling by row id re-SHUFFLES the entire
-        // joined output (24M rows at the bench — its single largest
-        // cost). Instead, attach the right ROW COLUMNS to the small
-        // keyed side BEFORE the big join (a small⋈small hash join), so
-        // the big side crosses exactly ONE exchange and the join output
-        // is final. The split rewrite stays confined to the key
-        // derivation: rightKeyedFinal carries (rid, key) from the
-        // (possibly split/rebased) cells, while the row columns come
-        // from the ORIGINAL rightRows.
-        val leftCols = left.columns
-        val rightCols = rightRows.columns.filter(_ != "key_right")
-        val clash = leftCols.toSet.intersect(rightCols.toSet)
-        val l = clash.foldLeft(left)((df, c) => df.withColumnRenamed(c, c + "_left"))
-        val r = clash.foldLeft(rightRows)((df, c) => df.withColumnRenamed(c, c + "_right"))
-        val lSid = if (clash.contains(leftSid)) leftSid + "_left" else leftSid
+    // non-broadcast builds
+    chooseShape(JoinConf(left.sparkSession), keyedRightRows, rightRowCount,
+      StareJoin.approxRowBytes(rightProbe), fullRowOk = joinType == "inner" || keys.size == 1) match {
+      case FullRow(build, rowsBuild) =>
+        // Full-row keyed right (r6, guide §2.3/§8): attach the right ROW
+        // COLUMNS to the small keyed side BEFORE the big join (a
+        // small⋈small join), so the big side crosses at most ONE exchange
+        // and the join output is final — assembling by row id would
+        // re-shuffle the entire joined output (24M rows at the bench, its
+        // single largest cost). The split rewrite stays confined to the
+        // key derivation: rightKeyedFinal carries (rid, key) from the
+        // (possibly split/rebased) cells, the row columns come from the
+        // ORIGINAL rightRows. A single-key left join is exact here: a
+        // non-match is THE unmatched row, and a match has exact
+        // multiplicity (cells within a cover row are disjoint, so one key
+        // matches at most one cell per right row).
         val rightFull = rightKeyedFinal
-          .join(r.hint("shuffle_hash"), col("__rid") === col("key_right"), "inner")
+          .join(rowsBuild(rightRows), col("__rid") === col("key_right"), "inner")
           .drop("__rid")
-        // key expressions rebuilt against the (possibly clash-renamed)
-        // left sid column
-        val keyedLeftFull =
-          l.withColumn("__lk", explode(filter(array(keyExprsFor(col(lSid)): _*), c => c.isNotNull)))
-        val out = keyedLeftFull
-          .join(rightFull.hint("shuffle_hash"), StareJoin.mixKey(col("__lk")) === StareJoin.mixKey(col("__rk")), "inner")
-          .drop("__lk", "__rk")
-        // column order contract: left columns, key_right, right columns
-        val ordered = l.columns.filter(_ != "__lk").map(out(_)) ++
-          Array(out("key_right")) ++ r.columns.filter(_ != "key_right").map(out(_))
-        out.select(ordered.toIndexedSeq: _*)
-      case "inner" =>
-        val joined = keyedLeft(left).join(rightForKeyJoin, StareJoin.mixKey(col("__lk")) === StareJoin.mixKey(col("__rk")), "inner")
-          .drop("__lk", "__rk")
-        StareJoin.assemble(joined, assembleRight, how = "inner", broadcastRight = assembleBroadcast)
-      case "left" if keyExprsFor(col(leftSid)).size == 1 =>
-        // Single candidate key per left row (the post-rebase common
-        // case: one uniform base level, no gated split levels, and —
-        // provably, see the suppression construction — no suppression
-        // predicates either): a DIRECT left equi-join is exact. The
-        // pair/join-back shape below exists because a row exploded to
-        // N candidate keys left-joins into one spurious all-null row
-        // per non-matching key; with exactly one key a non-match is
-        // THE unmatched row and a match has exact multiplicity (cells
-        // within a cover row are disjoint, so one key matches at most
-        // one cell per right row). Collapses three passes over the big
-        // side (key join + id join-back + assemble) into ONE — q43's
-        // cold sweep cost roughly halves, and at scale the big side
-        // crosses exactly one exchange like the inner full-row path.
-        val leftCols = left.columns
-        val rightCols = rightRows.columns.filter(_ != "key_right")
-        val clash = leftCols.toSet.intersect(rightCols.toSet)
-        val l = clash.foldLeft(left)((df, c) => df.withColumnRenamed(c, c + "_left"))
-        val r = clash.foldLeft(rightRows)((df, c) => df.withColumnRenamed(c, c + "_right"))
-        val lSid = if (clash.contains(leftSid)) leftSid + "_left" else leftSid
-        // small x small build: broadcast the row side when it fits (two
-        // exchanges saved at fixed cost; same output either way)
-        val rBuild =
-          if (assembleBroadcast) org.apache.spark.sql.functions.broadcast(r)
-          else r.hint("shuffle_hash")
-        val rightFullPlain = rightKeyedFinal
-          .join(rBuild, col("__rid") === col("key_right"), "inner")
-          .drop("__rid")
-        val rightFull =
-          if (assembleBroadcast) org.apache.spark.sql.functions.broadcast(rightFullPlain)
-          else if (estRightRowsBytes / math.max(1, shufflePartitions) <= shjBuildCap)
-            rightFullPlain.hint("shuffle_hash")
-          else rightFullPlain
-        val out = l.withColumn("__lk", keyExprsFor(col(lSid)).head)
-          .join(rightFull, StareJoin.mixKey(col("__lk")) === StareJoin.mixKey(col("__rk")), "left")
-          .drop("__lk", "__rk")
-        val ordered = l.columns.filter(_ != "__lk").map(out(_)) ++
-          Array(out("key_right")) ++ r.columns.filter(_ != "key_right").map(out(_))
-        out.select(ordered.toIndexedSeq: _*)
-      case "left" =>
-        // pair ids first (cover cells are disjoint after compression, so
-        // pairs are already unique), then re-attach unmatched left rows.
-        // The pairs join-back (not a direct left join) is load-bearing
-        // here: with multiple candidate key levels a direct left join
-        // would emit one spurious all-null row per non-matching key.
-        val leftIds = StareJoin.withStableId(left, "__stare_lid")
-        val pairs = keyedLeft(leftIds.select(col("__stare_lid"), col(leftSid)))
-          .join(rightForKeyJoin, StareJoin.mixKey(col("__lk")) === StareJoin.mixKey(col("__rk")), "inner")
-          .select(col("__stare_lid"), col("__rid"))
-        val joined = leftIds.join(pairs, Seq("__stare_lid"), "left").drop("__stare_lid")
-        StareJoin.assemble(joined, assembleRight, how = "left", broadcastRight = assembleBroadcast)
-      case other => throw new IllegalArgumentException(s"how=$other (inner|left)")
+        val keyedLeft = left.withColumn("__lk", if (joinType == "inner") allKeys else keys.head)
+        StareJoin.contractJoin(keyedLeft, rightFull, keyMatch, joinType, build)
+      case Pairs(keysBuild, rowsBuild) =>
+        // cover cells are disjoint after compression, so pairs are
+        // already unique. A left join pairs stable row ids first, then
+        // re-attaches unmatched left rows.
+        val joined =
+          if (joinType == "inner")
+            left.withColumn("__lk", allKeys).join(keysBuild(rightKeyedFinal), keyMatch, "inner")
+              .drop("__lk", "__rk")
+          else {
+            val leftIds = StareJoin.withStableId(left, "__stare_lid")
+            val pairs = leftIds.select(col("__stare_lid"), col(leftSid))
+              .withColumn("__lk", allKeys)
+              .join(keysBuild(rightKeyedFinal), keyMatch, "inner")
+              .select(col("__stare_lid"), col("__rid"))
+            leftIds.join(pairs, Seq("__stare_lid"), "left").drop("__stare_lid")
+          }
+        StareJoin.assemble(joined, rightRows, joinType, rowsBuild)
     }
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.core.Sid
 import graft.functions.StareFunctions._
@@ -19,14 +19,20 @@ import graft.functions.StareFunctions._
   *
   *     sid_a ⊇ sid_b  ⟺  clearTo(b, level(a)) == normalize(a)
   *
-  * We explode the right covers (one row per cover sid, keyed by its
-  * normalized sid), collect the small set of distinct cover levels, and
-  * explode each left sid into one ancestor key per cover level. The
-  * result is a plain hash/broadcast equi-join: Catalyst broadcasts the
-  * (small) exploded cover side, AQE handles skew on the shuffle path,
-  * and no custom physical operator is needed. The reverse containment
-  * direction (left sid coarser than a right cover sid) is the mirrored
-  * prefix join; pairs are deduplicated before row assembly.
+  * Three joins share that key rule and one output contract
+  * (`contractJoin`):
+  *  - `pointJoin` (scalar point sids vs array covers) has ONE local
+  *    plan: the cover side is collected, expanded on the driver to its
+  *    finest level and broadcast as a dictionary of full cover rows, so
+  *    each point derives one key and the probe is the only pass over the
+  *    big side. Every case that plan does not fit goes to
+  *    `Skew.shuffleJoin`.
+  *  - `Skew.shuffleJoin` partitions both sides. It has two output shapes
+  *    (full right rows on the keyed side, or (row id, key) pairs plus a
+  *    join-back by row id) and one chooser that picks the shape and
+  *    every build from exact sizes.
+  *  - `join` (covers vs covers) keys both containment directions, or
+  *    runs an exact driver-local loop when both sides are small.
   */
 object StareJoin {
 
@@ -56,36 +62,45 @@ object StareJoin {
   private[operators] def mixKey(c: Column): Column =
     c.bitwiseXOR(shiftrightunsigned(c, 31))
 
-  /** normalized key of a sid at its own (statically known) level. */
-  private def normKey(sid: Column, level: Int): Column = stareClearTo(sid, level)
-
-  /** ancestor keys of a sid for the given candidate levels, keeping only
-    * levels at or above the sid's own level. With a known minimum sid
-    * level, levels at or below it need no per-row guard. */
-  private def ancestorKeys(sid: Column, levels: Array[Int],
-                           knownMinLevel: Option[Int] = None): Column = {
-    val ml = knownMinLevel.getOrElse(-1)
-    val guarded = levels.map { l =>
-      if (l <= ml) stareClearTo(sid, l)
-      else when(stareLevel(sid) >= l, stareClearTo(sid, l))
-    }
-    if (levels.forall(_ <= ml)) array(guarded: _*)
-    else filter(array(guarded: _*), c => c.isNotNull)
+  /** The Spark join type for `how`, checked before any job runs. */
+  private[operators] def checkHow(how: String): String = how match {
+    case "left" | "inner" => how
+    case other            => throw new IllegalArgumentException(s"how=$other (left|inner)")
   }
 
-  /** Point-left fast path: left has a scalar sid column (points at a
-    * fine level), right has an array cover column. Returns the joined
-    * frame with all left columns, `key_right`, and right columns
-    * (clashes suffixed). This is the 100TB-shape join: the big point
-    * side is never exploded more than |cover levels| times and the
-    * cover side broadcasts.
+  /** ancestor keys of a sid for the given candidate levels, keeping only
+    * levels at or above the sid's own level. */
+  private def ancestorKeys(sid: Column, levels: Array[Int]): Column =
+    filter(array(levels.map(l => when(stareLevel(sid) >= l, stareClearTo(sid, l))): _*),
+      c => c.isNotNull)
+
+  /** Point-left join: left has a scalar sid column (points at a fine
+    * level), right has an array cover column. Returns the joined frame
+    * with all left columns, `key_right`, and right columns (clashes
+    * suffixed). This is the 100TB-shape join.
     *
-    * PRECONDITION (both plans): left sids must be at least as fine as
-    * the cover cells they should match — only the cover-contains-point
-    * direction is implemented. A left sid COARSER than a cover cell
-    * derives no key at that cell's level and never matches (use join()
-    * for cover-vs-cover semantics). Fine-level point tables (level
-    * 26/27) vs polygon covers (level <= ~12) always satisfy this.
+    * One local plan, the full-row dictionary: the cover side is
+    * collected, each compressed cover is expanded to the finest cover
+    * level, and the full right rows keyed by those cells are broadcast.
+    * Every point derives exactly ONE cleared key, so the probe is the
+    * only pass over the big side. Expansion is per right row over
+    * disjoint cells, so pair multiplicity is unchanged. Every other case
+    * is routed to `Skew.shuffleJoin`, which has the same pair semantics
+    * and output contract:
+    *  - the right side is over `maxBroadcastRows` rows or ~512 MB;
+    *  - the dictionary would exceed 4M keys or 256 MB;
+    *  - the cover has several levels and some left sid is coarser than
+    *    the finest one (one key per row would lose that row's match).
+    * Past the collect, the shuffle join gets the collected rows as a
+    * local frame plus the min left level already computed, so neither
+    * the right plan nor the left min-level aggregate runs twice.
+    *
+    * PRECONDITION: left sids must be at least as fine as the cover
+    * cells they should match — only the cover-contains-point direction
+    * is implemented. A left sid COARSER than a cover cell derives no key
+    * at that cell's level and never matches (use join() for
+    * cover-vs-cover semantics). Fine-level point tables (level 26/27) vs
+    * polygon covers (level <= ~12) always satisfy this.
     *
     * `knownMinLeftLevel`: callers that KNOW their minimum left sid
     * level (e.g. a table indexed at level 26) pass it so the per-row
@@ -97,6 +112,9 @@ object StareJoin {
   def pointJoin(left: DataFrame, leftSid: String, right: DataFrame, rightSids: String,
                 how: String = "left", knownMinLeftLevel: Option[Int] = None,
                 maxBroadcastRows: Int = 1 << 20): DataFrame = {
+    val joinType = checkHow(how)
+    def viaShuffle(r: DataFrame, minLeftLevel: Option[Int]): DataFrame =
+      Skew.shuffleJoin(left, leftSid, r, rightSids, how = how, knownMinLeftLevel = minLeftLevel)
     // Guard the by-design assumption instead of trusting the caller: the
     // cover side is about to be collect()ed to the driver. One SMALL
     // probe collect answers the common case (covers of a few rows)
@@ -107,11 +125,7 @@ object StareJoin {
     // guard so probe + count + collect evaluate each partition of the
     // right plan at most ~once (r3 verdict item 8: the un-cached guard
     // scheduled up to 3 full evaluations for 1000..1M-row covers); the
-    // cache is dropped before returning on every path. The byte cap
-    // applies on the small-probe branch too — a handful of very fat
-    // rows (huge text/sid payloads) must not reach the driver either.
-    // Over either cap we delegate to the shuffle-path join, which
-    // shares the output contract.
+    // cache is dropped before returning on every path.
     val spark = left.sparkSession
     val probeCap = math.min(1000, maxBroadcastRows)
     val maxBroadcastBytes = 512L * 1024 * 1024
@@ -120,76 +134,32 @@ object StareJoin {
     // persists its reusable sides across rounds)
     val weCached = right.storageLevel == org.apache.spark.storage.StorageLevel.NONE
     if (weCached) right.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val collected: Array[org.apache.spark.sql.Row] =
+    val collected: Array[Row] =
       try {
         val probe = right.limit(probeCap + 1).collect()
-        if (probe.length <= probeCap) {
-          if (approxRowBytes(probe) * probe.length > maxBroadcastBytes)
-            return Skew.shuffleJoin(left, leftSid, right, rightSids, splitHot = None,
-              how = how, knownMinLeftLevel = knownMinLeftLevel)
-          probe
-        } else {
-          val n = right.count()
-          if (n > maxBroadcastRows || approxRowBytes(probe) * n > maxBroadcastBytes)
-            return Skew.shuffleJoin(left, leftSid, right, rightSids, splitHot = None,
-              how = how, knownMinLeftLevel = knownMinLeftLevel)
-          right.collect()
-        }
+        val n = if (probe.length <= probeCap) probe.length.toLong else right.count()
+        if (n > maxBroadcastRows || approxRowBytes(probe) * n > maxBroadcastBytes)
+          return viaShuffle(right, knownMinLeftLevel)
+        if (probe.length <= probeCap) probe else right.collect()
       } finally if (weCached) right.unpersist(false)
-    // The cover side fits in a broadcast, so assign row ids
-    // on the driver: deterministic across every reuse of the frame (no
-    // monotonically_increasing_id re-evaluation hazard) and no lingering
-    // persist() that pressures the executor cache across queries.
-    val rightRows = {
-      val schema = org.apache.spark.sql.types.StructType(
-        right.schema.fields :+ org.apache.spark.sql.types.StructField("key_right", org.apache.spark.sql.types.LongType, nullable = false))
-      val rows: java.util.List[org.apache.spark.sql.Row] =
-        java.util.Arrays.asList(collected.zipWithIndex.map { case (r, i) =>
-          org.apache.spark.sql.Row.fromSeq(r.toSeq :+ i.toLong)
-        }: _*)
-      spark.createDataFrame(rows, schema)
-    }
-    // compress each cover first: canonical covers are non-nested, so a
-    // point matches at most one cover sid per right row — no pair dedup
-    // (and hence no join-back on a big-side row id) is ever needed.
-    val rightKeyed = rightRows
-      .withColumn("__cs", stareCompress(col(rightSids)))
-      .select(col("key_right").as("__rid"), explode(col("__cs")).as("__rs"))
-      .withColumn(RKey, stareClearToOwn(col("__rs")))
-      .select(col("__rid"), col(RKey))
 
-    // cover cells per collected row, computed ONCE on the driver: they
-    // feed the key set, the level set, and the per-ROW expansion budget
-    // (a Spark distinct() job here re-evaluated the cover side again)
+    // compressed cover cells per collected row, computed ONCE on the
+    // driver: they feed the level set and the per-ROW expansion budget.
+    // Canonical covers are non-nested, so a point matches at most one
+    // cell per right row — no pair dedup is ever needed.
     val sidsIdx = right.schema.fieldIndex(rightSids)
     val perRowCells: Array[Array[Long]] = collected.map { r =>
       val s = r.getSeq[Long](sidsIdx)
       if (s == null) Array.emptyLongArray else Sid.compress(s.toArray)
     }
-    val keySet = perRowCells.iterator.flatMap(_.iterator).map(Sid.clearToLevel).toSet
-    if (keySet.isEmpty) {
-      // every right cover is empty: inner -> no rows, left -> all-null
-      // right columns (one row per left row)
-      val joined = left.withColumn("__rid", lit(null).cast("long"))
-      val base = if (how == "inner") joined.filter(lit(false)) else joined
-      return assemble(base, rightRows, how, broadcastRight = true)
-    }
-    val levels = keySet.map(Sid.level).toArray.sorted
-
-    // Uniform-level dictionary plan: if expanding every cover cell to the
-    // finest cover level keeps the broadcast side small, each point needs
-    // exactly ONE cleared key — no explode, 1 probe/row instead of
-    // |levels| probes/row. The multi-level explode plan moved 5x the rows
-    // through the join and was memory-bandwidth-bound at high core
-    // counts. Expansion is per right row over disjoint cells, so pair
-    // multiplicity is unchanged.
-    val maxLevel = levels.last
-    // Expansion cost summed over ROWS, not distinct keys: both
-    // dictionary plans explode the cover per right row, so duplicate
-    // covers multiply the broadcast — a distinct-key budget admitted
-    // 500k rows sharing one cell into a plan that would expand each of
-    // them. Early exit once over budget (also prevents Long overflow on
-    // extreme level spreads).
+    val levels = perRowCells.iterator.flatMap(_.iterator).map(Sid.level).toArray.distinct.sorted
+    // all covers empty: the dictionary is empty, so inner joins nothing
+    // and left pads every row with null right columns
+    val maxLevel = levels.lastOption.getOrElse(0)
+    // Expansion cost summed over ROWS, not distinct keys: the dictionary
+    // expands the cover per right row, so duplicate covers multiply the
+    // broadcast. Early exit once over budget (also prevents Long
+    // overflow on extreme level spreads).
     val keyBudget = 4L * 1024 * 1024
     val expansionCost: Long = {
       var cost = 0L
@@ -204,123 +174,66 @@ object StareJoin {
       }
       cost
     }
-    // budgets: row-count cap (4M keys ~ 64 MB as bare (rid, key) pairs)
-    // decides whether a uniform-level dictionary is viable at all; a
-    // BYTE cap on expansionCost x measured-row-width decides whether the
-    // dictionary can carry the full right rows (probe = the only pass
-    // over the big side) or only (rid, key) pairs + a re-join — a fat
-    // cover side (wide payload columns, big sid arrays) duplicated per
-    // expanded cell would otherwise build a multi-GB broadcast.
-    val rowBytes = approxRowBytes(collected)
-    val fullRowDictBytes = expansionCost * rowBytes
-    // A uniform-level dictionary probes every left row at exactly ONE
-    // level, so it is only SOUND when every left sid is at least as
-    // fine as the finest cover cell: a left row with level in
-    // [cellLevel, maxLevel) is contained by a coarse cell but would
-    // derive no key at maxLevel and silently lose that match (the same
-    // hazard ADVICE r3 flagged on the shuffle path's rebase). A
-    // single-level cover needs no check — a row coarser than the only
-    // level is matchless under the containment contract and its null
-    // key is exact. Otherwise the declared min left level decides, or —
-    // when the caller declared nothing — one narrow column-pruned agg
-    // job over the left sid column does. Mixed-level lefts fall through
-    // to the per-level-guarded explode plan, which is exact for any mix.
-    val dictSafe = expansionCost <= keyBudget &&
-      (levels.length <= 1 || knownMinLeftLevel.map(_ >= maxLevel).getOrElse {
+    // A one-level dictionary probes every left row at exactly ONE level,
+    // so it is only SOUND when every left sid is at least as fine as the
+    // finest cover cell: a left row with level in [cellLevel, maxLevel)
+    // is contained by a coarse cell but would derive no key at maxLevel
+    // and silently lose that match. A single-level cover needs no check
+    // — a row coarser than the only level is matchless under the
+    // containment contract and its null key is exact. Otherwise the
+    // declared min left level decides, or — when the caller declared
+    // nothing — one narrow column-pruned agg job over the left sid
+    // column does; the shuffle join reuses its answer.
+    val minLeftLevel: Option[Int] =
+      if (levels.length <= 1 || expansionCost > keyBudget) knownMinLeftLevel
+      else knownMinLeftLevel.orElse(Some(
         left.agg(min(stareLevel(col(leftSid)))).collect()(0) match {
-          case r if r.isNullAt(0) => true
-          case r                  => r.getLong(0) >= maxLevel
-        }
-      })
-    if (dictSafe && fullRowDictBytes <= 256L * 1024 * 1024) {
-      // The dictionary carries the right ROW COLUMNS directly (suffixed
-      // up front), so the probe is the ONLY pass over the big side —
-      // routing just row ids and re-joining in assemble() cost a second
-      // full broadcast-probe over every left row.
-      val leftCols = left.columns
-      val rightCols = rightRows.columns.filter(_ != "key_right")
-      val clash = leftCols.toSet.intersect(rightCols.toSet)
-      val l = clash.foldLeft(left)((df, c) => df.withColumnRenamed(c, c + "_left"))
-      val r = clash.foldLeft(rightRows)((df, c) => df.withColumnRenamed(c, c + "_right"))
-      val leftSidCol = if (clash.contains(leftSid)) leftSid + "_left" else leftSid
-      val rightSidsCol = if (clash.contains(rightSids)) rightSids + "_right" else rightSids
-      val expandAll = udf((sids: Seq[Long]) => Sid.expandToLevel(sids.toArray, maxLevel))
-      val rightUniform = r.withColumn(RKey, explode(expandAll(stareCompress(col(rightSidsCol)))))
-      // precondition of this plan: left sids are at least as fine as the
-      // finest cover cell (true for point tables at level 26/27 vs
-      // polygon covers; coarser left sids should use join() instead).
-      // Coarser rows get a null key => no match, never a wrong match.
-      // With a known-fine left the guard drops at plan time (one encode
-      // evaluation per row instead of three — see method doc).
-      // knownMinLeftLevel also implies non-null sids (an indexed table),
-      // so the key is marked KnownNotNull: without it the planner infers
-      // an IsNotNull(key) filter that re-evaluates the key expression —
-      // i.e. a second encode per row when sid is an unevaluated encode.
-      val leftKeyed = knownMinLeftLevel match {
-        case Some(ml) if ml >= maxLevel =>
-          l.withColumn(LKey, graft.functions.NativeExpressions.knownNotNull(
-            stareClearTo(col(leftSidCol), maxLevel)))
-        case _ => l.withColumn(LKey,
-          when(stareLevel(col(leftSidCol)) >= maxLevel, stareClearTo(col(leftSidCol), maxLevel)))
-      }
-      val joinType = if (how == "inner") "inner" else "left"
-      // NOTE: for how='left' a point matching nothing keeps one row with
-      // all-null right columns — exactly stare_join's left semantics, no
-      // key filter needed because there is a single key per row.
-      val out = leftKeyed
-        .join(broadcast(rightUniform), mixKey(col(LKey)) === mixKey(col(RKey)), joinType)
-        .drop(LKey, RKey)
-      // column order: left columns, key_right, right columns (test_join.py:77-81)
-      val ordered = l.columns.filter(c => c != LKey).map(out(_)) ++
-        Array(out("key_right")) ++ r.columns.filter(_ != "key_right").map(out(_))
-      return out.select(ordered.toIndexedSeq: _*)
-    }
-    if (dictSafe) {
-      // Slim dictionary: same single-probe key plan, but the broadcast
-      // carries only (rid, key) pairs; the right row columns re-attach in
-      // assemble() via a second (cheap — the dictionary already filtered)
-      // broadcast join. Chosen when the full-row dictionary would blow
-      // the byte budget (fat right rows x expansion).
-      val expandAll = udf((sids: Seq[Long]) => Sid.expandToLevel(sids.toArray, maxLevel))
-      val slim = rightRows.select(col("key_right").as("__rid"),
-        explode(expandAll(stareCompress(col(rightSids)))).as(RKey))
-      val leftKeyed = knownMinLeftLevel match {
-        case Some(ml) if ml >= maxLevel =>
-          left.withColumn(LKey, graft.functions.NativeExpressions.knownNotNull(
-            stareClearTo(col(leftSid), maxLevel)))
-        case _ => left.withColumn(LKey,
-          when(stareLevel(col(leftSid)) >= maxLevel, stareClearTo(col(leftSid), maxLevel)))
-      }
-      val joinType = if (how == "inner") "inner" else "left"
-      val joined = leftKeyed.join(broadcast(slim), mixKey(col(LKey)) === mixKey(col(RKey)), joinType)
-        .drop(LKey, RKey)
-      return assemble(joined, rightRows, how, broadcastRight = true)
-    }
+          case r if r.isNullAt(0) => Sid.MaxLevel // empty left
+          case r                  => r.getLong(0).toInt
+        }))
+    val dictSafe = expansionCost <= keyBudget &&
+      (levels.length <= 1 || minLeftLevel.exists(_ >= maxLevel))
+    // a BYTE cap on expansionCost x measured row width too: a fat cover
+    // side (wide payload columns, big sid arrays) duplicated per
+    // expanded cell would otherwise build a multi-GB broadcast
+    if (!dictSafe || expansionCost * approxRowBytes(collected) > 256L * 1024 * 1024)
+      return viaShuffle(spark.createDataFrame(java.util.Arrays.asList(collected: _*), right.schema),
+        minLeftLevel)
 
-    val joined = if (how == "inner") {
-      // hot path: pure-native explode of the ancestor keys (one CASE+bit
-      // op per cover level, whole-stage codegen, zero allocation) and an
-      // inner hash probe — unmatched keys simply drop out. |levels| is
-      // small (compressed covers), so the explode factor is bounded.
-      val leftKeyed = left.withColumn(LKey,
-        explode(ancestorKeys(col(leftSid), levels, knownMinLeftLevel)))
-      leftKeyed.join(broadcast(rightKeyed), mixKey(col(LKey)) === mixKey(col(RKey)), "inner")
-        .drop(LKey, RKey)
-    } else {
-      // left join: pre-filter each point's ancestor keys to those that
-      // exist on the right (the cover side is broadcast anyway, so its
-      // key set fits on the driver). Every surviving key matches >= 1
-      // right row, and a row with no surviving key explodes to a single
-      // null key — exact stare_join multiplicity with no row id,
-      // join-back, or window pass over the big side.
-      val filterKeys = udf((ks: Seq[Long]) => { val f = ks.filter(keySet); if (f.isEmpty) null else f })
-      val leftKeyed = left.withColumn(LKey,
-        explode_outer(filterKeys(ancestorKeys(col(leftSid), levels, knownMinLeftLevel))))
-      leftKeyed.join(broadcast(rightKeyed), mixKey(col(LKey)) === mixKey(col(RKey)), "left")
-        .drop(LKey, RKey)
+    // The cover side fits in a broadcast, so assign row ids on the
+    // driver: deterministic across every reuse of the frame (no
+    // monotonically_increasing_id re-evaluation hazard) and no lingering
+    // persist() that pressures the executor cache across queries.
+    val rightRows = {
+      val schema = org.apache.spark.sql.types.StructType(
+        right.schema.fields :+ org.apache.spark.sql.types.StructField("key_right", org.apache.spark.sql.types.LongType, nullable = false))
+      val rows: java.util.List[Row] =
+        java.util.Arrays.asList(collected.zipWithIndex.map { case (r, i) =>
+          Row.fromSeq(r.toSeq :+ i.toLong)
+        }: _*)
+      spark.createDataFrame(rows, schema)
     }
-
-    assemble(joined, rightRows, how, broadcastRight = true)
+    val expandAll = udf((sids: Seq[Long]) => Sid.expandToLevel(sids.toArray, maxLevel))
+    val rightUniform = rightRows.withColumn(RKey, explode(expandAll(stareCompress(col(rightSids)))))
+    // Coarser left rows get a null key => no match, never a wrong match.
+    // With a known-fine left the guard drops at plan time (one encode
+    // evaluation per row instead of three — see method doc).
+    // knownMinLeftLevel also implies non-null sids (an indexed table),
+    // so the key is marked KnownNotNull: without it the planner infers
+    // an IsNotNull(key) filter that re-evaluates the key expression —
+    // i.e. a second encode per row when sid is an unevaluated encode.
+    val leftKeyed = knownMinLeftLevel match {
+      case Some(ml) if ml >= maxLevel =>
+        left.withColumn(LKey, graft.functions.NativeExpressions.knownNotNull(
+          stareClearTo(col(leftSid), maxLevel)))
+      case _ => left.withColumn(LKey,
+        when(stareLevel(col(leftSid)) >= maxLevel, stareClearTo(col(leftSid), maxLevel)))
+    }
+    // for how='left' a point matching nothing keeps one row with all-null
+    // right columns — exactly stare_join's left semantics, no key filter
+    // needed because there is a single key per row
+    contractJoin(leftKeyed, rightUniform, mixKey(col(LKey)) === mixKey(col(RKey)), joinType,
+      Build.Broadcast)
   }
 
   /** Rough in-memory width of a collected row (bytes) — drives the
@@ -399,6 +312,7 @@ object StareJoin {
     * level is actually coarser than the finest right level. */
   def join(left: DataFrame, leftSids: String, right: DataFrame, rightSids: String,
            how: String = "left"): DataFrame = {
+    val joinType = checkHow(how)
     // Small-sides fast path (r6, guide §1.2): both sides of a general
     // cover×cover join pass through withStableId, whose RDD round-trip
     // erases size statistics — every downstream join then plans as a
@@ -419,7 +333,7 @@ object StareJoin {
           approxRowBytes(lp) * lp.length + approxRowBytes(rp) * rp.length <=
             128L * 1024 * 1024)
           return localJoin(left.sparkSession, lp, left.schema, leftSids,
-            rp, right.schema, rightSids, how)
+            rp, right.schema, rightSids, joinType)
       }
     }
     // both level sets in one tiny aggregation job
@@ -457,7 +371,7 @@ object StareJoin {
 
     val joined = leftIds.join(pairs, leftIds("__lid") === pairs("__plid"), "left")
       .drop("__lid", "__plid")
-    assemble(joined, rightIds, how, broadcastRight = false)
+    assemble(joined, rightIds, joinType, Build.SortMerge)
   }
 
   /** Driver-local general join over two collected sides: exact
@@ -473,8 +387,6 @@ object StareJoin {
                         rightRows: Array[org.apache.spark.sql.Row],
                         rightSchema: org.apache.spark.sql.types.StructType, rightSids: String,
                         how: String): DataFrame = {
-    if (how != "left" && how != "inner")
-      throw new IllegalArgumentException(s"how=$how (left|inner)")
     val lIdx = leftSchema.fieldIndex(leftSids)
     val rIdx = rightSchema.fieldIndex(rightSids)
     def cells(r: org.apache.spark.sql.Row, i: Int): Array[Long] = {
@@ -484,17 +396,16 @@ object StareJoin {
     val rightCells = rightRows.map(cells(_, rIdx))
     val rightIntervals = rightCells.map(c =>
       if (c.isEmpty) Array.empty[(Long, Long)] else Sid.mergedIntervals(c))
-    val clash = leftSchema.fieldNames.toSet.intersect(rightSchema.fieldNames.toSet)
-    def suffixed(s: org.apache.spark.sql.types.StructType, suf: String, forceNull: Boolean) =
-      s.fields.map { f =>
-        val n = if (clash.contains(f.name)) f.name + suf else f.name
-        f.copy(name = n, nullable = f.nullable || forceNull)
-      }
+    val (lNames, rNames) = clashRenames(leftSchema.fieldNames, rightSchema.fieldNames)
+    def suffixed(s: org.apache.spark.sql.types.StructType, names: Map[String, String],
+                 forceNull: Boolean) =
+      s.fields.map(f => f.copy(name = names.getOrElse(f.name, f.name),
+        nullable = f.nullable || forceNull))
     val outSchema = org.apache.spark.sql.types.StructType(
-      suffixed(leftSchema, "_left", forceNull = false) ++
+      suffixed(leftSchema, lNames, forceNull = false) ++
         (org.apache.spark.sql.types.StructField("key_right",
           org.apache.spark.sql.types.LongType, nullable = how == "left") +:
-          suffixed(rightSchema, "_right", forceNull = how == "left")))
+          suffixed(rightSchema, rNames, forceNull = how == "left")))
     val nullRight: Seq[Any] = Seq.fill(rightSchema.fields.length + 1)(null)
     val out = new scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Row]()
     leftRows.foreach { lr =>
@@ -517,24 +428,50 @@ object StareJoin {
     spark.createDataFrame(java.util.Arrays.asList(out.toSeq: _*), outSchema)
   }
 
-  /** suffix clashing columns and finish the left/inner assembly. */
-  private[operators] def assemble(leftWithRid: DataFrame, rightRows: DataFrame, how: String,
-                                  broadcastRight: Boolean): DataFrame = {
-    val leftCols = leftWithRid.columns.filter(_ != "__rid")
-    val rightCols = rightRows.columns.filter(_ != "key_right")
-    val clash = leftCols.toSet.intersect(rightCols.toSet)
-    val l = clash.foldLeft(leftWithRid)((df, c) => df.withColumnRenamed(c, c + "_left"))
-    val r = clash.foldLeft(rightRows)((df, c) => df.withColumnRenamed(c, c + "_right"))
-    val joinType = how match {
-      case "left"  => "left"
-      case "inner" => "inner"
-      case other   => throw new IllegalArgumentException(s"how=$other (left|inner)")
-    }
-    val rf = if (broadcastRight) broadcast(r) else r
-    val out = l.join(rf, l("__rid") === r("key_right"), joinType)
-    // column order: left columns, key_right, right columns (test_join.py:77-81)
-    val ordered = l.columns.filter(_ != "__rid").map(out(_)) ++
-      Array(out("key_right")) ++ r.columns.filter(_ != "key_right").map(out(_))
-    out.select(ordered.toIndexedSeq: _*)
+  /** Columns the output contract neither suffixes nor keeps: the join
+    * keys and the row id (`key_right` is placed by `contractJoin`). */
+  private val Internal = Set(LKey, RKey, "__lk", "__rk", "__rid", "key_right")
+
+  /** The contract's clash rule, in one place: a column named on both
+    * sides becomes `name_left` on the left and `name_right` on the
+    * right. Returns the (left, right) renames. */
+  private def clashRenames(leftCols: Seq[String],
+                           rightCols: Seq[String]): (Map[String, String], Map[String, String]) = {
+    val clash = leftCols.toSet.intersect(rightCols.toSet) -- Internal
+    (clash.map(c => c -> (c + "_left")).toMap, clash.map(c => c -> (c + "_right")).toMap)
   }
+
+  /** Joins `left` to `right` (which carries `key_right`) on `on` under the
+    * output contract: clashing columns suffixed, then the left columns,
+    * `key_right`, and the right columns (test_join.py:77-81). `build`
+    * plans the right side. */
+  private[operators] def contractJoin(left: DataFrame, right: DataFrame, on: Column,
+                                      joinType: String, build: Build): DataFrame = {
+    val lCols = left.columns.filterNot(Internal)
+    val rCols = right.columns.filterNot(Internal)
+    val (lNames, rNames) = clashRenames(lCols.toSeq, rCols.toSeq)
+    val l = lNames.foldLeft(left) { case (df, (c, n)) => df.withColumnRenamed(c, n) }
+    val r = rNames.foldLeft(right) { case (df, (c, n)) => df.withColumnRenamed(c, n) }
+    val out = l.join(build(r), on, joinType)
+    out.select((lCols.map(c => out(lNames.getOrElse(c, c))) :+ out("key_right")) ++
+      rCols.map(c => out(rNames.getOrElse(c, c))): _*)
+  }
+
+  /** The row-id join-back: attaches the right rows to (left columns,
+    * `__rid`) pairs. */
+  private[operators] def assemble(leftWithRid: DataFrame, rightRows: DataFrame, joinType: String,
+                                  build: Build): DataFrame =
+    contractJoin(leftWithRid, rightRows, col("__rid") === col("key_right"), joinType, build)
+}
+
+/** How a join plans its build side. `SortMerge` adds no hint: the join
+  * family's lineages carry no size statistics, so Catalyst then plans a
+  * sort-merge join (which spills gracefully for huge sides). */
+private[operators] sealed abstract class Build(plan: DataFrame => DataFrame) {
+  def apply(df: DataFrame): DataFrame = plan(df)
+}
+private[operators] object Build {
+  case object Broadcast extends Build(df => broadcast(df))
+  case object ShuffleHash extends Build(_.hint("shuffle_hash"))
+  case object SortMerge extends Build(identity)
 }

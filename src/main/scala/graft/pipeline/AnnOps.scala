@@ -74,11 +74,7 @@ object AnnOps {
         v
       }
     }
-    private[pipeline] def sizeNow: Int = cache.size
   }
-  private[pipeline] def planeCacheSize: Int = PlaneCache.sizeNow
-  private[pipeline] def planeCacheFill(configs: Int): Unit =
-    (0 until configs).foreach(i => PlaneCache.components(1000 + i, 1, 1))
 
   /** sign-bit signature of a vector against `planes` hyperplanes
     * starting at global plane index `offset`. */

@@ -140,9 +140,6 @@ object TextOps {
     }
   })
 
-  /** deterministic 64-bit-ish hash of a string column (xxhash64). */
-  def h64(c: Column, seed: Int): Column = xxhash64(c, lit(seed))
-
   /** MinHash signature: for each of `perms` hash seeds, the minimum
     * shingle hash. Returns array<bigint> of length perms.
     *
@@ -463,13 +460,6 @@ object TextOps {
 
   private def countOcc(text: Column, token: String): Column =
     ((length(text) - length(regexp_replace(text, token, ""))) / token.length).cast("long")
-
-  def langScores(text: Column): Seq[(String, Column)] = {
-    val padded = concat(lit(" "), lower(text), lit(" "))
-    langMarkers.toSeq.sortBy(_._1).map { case (lang, toks) =>
-      lang -> toks.map(t => countOcc(padded, t)).reduce(_ + _)
-    }
-  }
 
   /** predicted language code (ties -> lexicographically first, 'und' if
     * all scores zero). One UDF pass over the text: the pure-SQL variant

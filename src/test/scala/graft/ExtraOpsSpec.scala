@@ -165,20 +165,21 @@ class ExtraOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // ...so force the shuffle regime (a cover side beyond broadcast
     // comfort) for the mechanism tests below
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    // no wall-clock allowance: at unit-test scale the projected melt is
+    // micro-seconds, and these tests exercise the split MECHANISM
+    spark.conf.set("spark.graft.skew.splitOverheadSec", "0")
     try {
     // the split spec must be non-trivial: real parents, strictly deeper
     // children (guards the round-1 regression where re-compression
     // silently undid every split before the join keys)
-    // wallClockGate off: at unit-test scale the projected melt is
-    // micro-seconds, and these tests exercise the split MECHANISM
     val spec = graft.operators.Skew.splitHotCellsWithSpec(pts, "sid", covers, "sids",
-      maxRowsPerCell = 100, sampleFraction = 0.5, wallClockGate = false)
+      maxRowsPerCell = 100, sampleFraction = 0.5)
     assert(spec.skipReason.isEmpty)
     assert(spec.parents.nonEmpty)
     assert(spec.parents.forall(p => p.childLevels.forall(_ > p.level)))
 
-    val split = graft.operators.Skew.splitHotCells(pts, "sid", covers, "sids",
-      maxRowsPerCell = 100, sampleFraction = 0.5, wallClockGate = false)
+    val split = graft.operators.Skew.splitHotCellsWithSpec(pts, "sid", covers, "sids",
+      maxRowsPerCell = 100, sampleFraction = 0.5).right
     // the hot cover must now contain deeper cells than the original
     val maxLevOrig = covers.select(explode(col("sids")).as("s")).agg(max(stareLevel(col("s")))).collect()(0).getLong(0)
     val maxLevSplit = split.select(explode(col("sids")).as("s")).agg(max(stareLevel(col("s")))).collect()(0).getLong(0)
@@ -186,8 +187,7 @@ class ExtraOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // identical pair results through the shuffle join with and without split
     val base = graft.operators.Skew.shuffleJoin(pts, "sid", covers, "sids")
       .select("id", "region").collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    val after = graft.operators.Skew.shuffleJoin(pts, "sid", covers, "sids", splitHot = Some(100L),
-        wallClockGate = false)
+    val after = graft.operators.Skew.shuffleJoin(pts, "sid", covers, "sids", splitHot = Some(100L))
       .select("id", "region").collect().map(r => (r.getLong(0), r.getString(1))).toSet
     assert(after === base)
     val viaBroadcast = graft.operators.StareJoin.pointJoin(pts, "sid", covers, "sids", how = "inner")
@@ -200,7 +200,7 @@ class ExtraOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .withColumn("sid", stareSid(col("lat"), col("lon"), 26))
     val ptsPlus = pts.unionByName(outOfCover)
     val shuffleLeft = graft.operators.Skew.shuffleJoin(ptsPlus, "sid", covers, "sids",
-      splitHot = Some(100L), how = "left", wallClockGate = false)
+      splitHot = Some(100L), how = "left")
     val broadcastLeft = graft.operators.StareJoin.pointJoin(ptsPlus, "sid", covers, "sids", how = "left")
     assert(shuffleLeft.columns.toSeq === broadcastLeft.columns.toSeq)
     def leftSetOf(df: org.apache.spark.sql.DataFrame) =
@@ -210,7 +210,10 @@ class ExtraOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(leftSetOf(shuffleLeft).contains((90000L, "__null")))
     // nothing left cached behind either join
     assert(spark.sparkContext.getPersistentRDDs.isEmpty)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
+    } finally {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
+      spark.conf.unset("spark.graft.skew.splitOverheadSec")
+    }
   }
 
   test("skew cost gate: a gate-skipped split run equals no-split exactly") {
@@ -263,15 +266,15 @@ class ExtraOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("fat cover rows pick the slim dictionary plan and keep results + contract") {
+  test("fat cover rows fall back to the shuffle join and keep results + contract") {
     import spark.implicits._
     val pts = ((1 to 300).map(i => (i.toLong, 10.0 + (i % 40) * 0.02, 10.0 + (i / 40) * 0.02)) :+
       ((9999L, 60.0, -170.0)))
       .toDF("id", "lat", "lon")
       .withColumn("sid", stareSid(col("lat"), col("lon"), 26))
     // ~16 MB per row: expansionCost x rowBytes blows the 256 MB full-row
-    // dictionary budget even for a handful of cover cells, forcing the
-    // slim (rid, key) + re-join plan
+    // dictionary budget even for a handful of cover cells, so pointJoin
+    // hands the collected rows to the shuffle join
     val fat = "x" * 8000000
     val covers = Seq(
       ("hot", graft.core.Cover.coverFromBox(8.0, 12.0, 8.0, 12.0, 6).toSeq, fat),
@@ -281,14 +284,14 @@ class ExtraOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       df.select("id", "region").collect()
         .map(r => (r.getLong(0), Option(r.getString(1)).getOrElse("__null"))).toSet
     for (how <- Seq("inner", "left")) {
-      val viaSlim = graft.operators.StareJoin.pointJoin(pts, "sid", covers, "sids", how = how,
+      val viaPoint = graft.operators.StareJoin.pointJoin(pts, "sid", covers, "sids", how = how,
         knownMinLeftLevel = Some(26))
       val viaShuffle = graft.operators.Skew.shuffleJoin(pts, "sid", covers, "sids", how = how,
         knownMinLeftLevel = Some(26))
-      assert(viaSlim.columns.toSeq === viaShuffle.columns.toSeq)
-      assert(pairs(viaSlim) === pairs(viaShuffle), s"slim-plan drift for how=$how")
+      assert(viaPoint.columns.toSeq === viaShuffle.columns.toSeq)
+      assert(pairs(viaPoint) === pairs(viaShuffle), s"fallback drift for how=$how")
       // right payload columns still attached after the re-join
-      val withPayload = viaSlim.filter(col("region") === "hot").select("payload").collect()
+      val withPayload = viaPoint.filter(col("region") === "hot").select("payload").collect()
       assert(withPayload.nonEmpty && withPayload.forall(_.getString(0) == fat))
     }
   }
@@ -449,9 +452,9 @@ class ExtraOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       def pairsOf(df: org.apache.spark.sql.DataFrame) =
         df.select("id", "region").collect().map(r => (r.getLong(0), r.getString(1))).toSet
       val viaShuffle = pairsOf(graft.operators.Skew.shuffleJoin(pts, "sid", covers, "sids"))
-      // the mixed-level-safe reference: pointJoin routes multi-level
-      // covers with an undeclared (and actually coarse) left min level
-      // to the per-level-guarded explode plan
+      // pointJoin measures the undeclared min left level (5, coarser
+      // than the finest cover level 6) and hands the join to shuffleJoin
+      // with it; the literal pair set below is the reference
       val viaBroadcast = pairsOf(
         graft.operators.StareJoin.pointJoin(pts, "sid", covers, "sids", how = "inner"))
       assert(viaShuffle.contains((5L, "r3")), "coarse left row lost by the rebase")

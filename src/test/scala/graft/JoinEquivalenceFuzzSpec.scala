@@ -190,6 +190,8 @@ class JoinEquivalenceFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
     val priorBcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
     // no broadcast: the splitter only engages when a per-key shuffle exists
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    // no wall-clock allowance: at test scale the projected saving is tiny
+    spark.conf.set("spark.graft.skew.splitOverheadSec", "0")
     try {
       (1 to 3).foreach { trial =>
         val hot = randomSid(r, 2 + r.nextInt(3)) // one hot cover cell
@@ -217,20 +219,23 @@ class JoinEquivalenceFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
         val rightDf = covers.toDF("rname", "sids")
         // prove the fuzz exercises the split machinery, not the skip path
         val spec = Skew.splitHotCellsWithSpec(leftDf, "sid", rightDf, "sids",
-          maxRowsPerCell = 100, sampleFraction = 1.0, wallClockGate = false)
+          maxRowsPerCell = 100, sampleFraction = 1.0)
         assert(spec.skipReason.isEmpty && spec.parents.nonEmpty,
           s"engineered skew did not engage the splitter: ${spec.skipReason}")
         Seq("inner", "left").foreach { how =>
           val exp = expectedPairs(left, covers, how, coverContains)
           val split = observedPairs(Skew.shuffleJoin(leftDf, "sid", rightDf, "sids",
-            splitHot = Some(100L), how = how, wallClockGate = false))
+            splitHot = Some(100L), how = how))
           assert(split === exp, s"split shuffleJoin vs brute — trial=$trial how=$how hot=$hot")
           val unsplit = observedPairs(Skew.shuffleJoin(leftDf, "sid", rightDf, "sids",
             splitHot = None, how = how))
           assert(unsplit === exp, s"unsplit shuffleJoin vs brute — trial=$trial how=$how hot=$hot")
         }
       }
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", priorBcast)
+    } finally {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", priorBcast)
+      spark.conf.unset("spark.graft.skew.splitOverheadSec")
+    }
   }
 
   test("single-level-cover LEFT shuffleJoin takes the direct-join path and stays exact (r6)") {
