@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.sql.functions._
 import graft.core.Sid
 import graft.functions.StareFunctions._
@@ -40,8 +41,49 @@ object Skew {
     * instead of re-aggregating the left side. */
   final case class SplitResult(right: DataFrame, parents: Seq[SplitParent],
                                keptLevels: Array[Int], skipReason: Option[String] = None,
-                               minLeftLevel: Int = Sid.MaxLevel,
-                               allCells: Array[Long] = Array.emptyLongArray)
+                               minLeftLevel: Int = Sid.MaxLevel)
+
+  /** A join's right side, measured by `sizeRight`: the (row, cell) pair
+    * count of every own-level cover cell, the exact row count (rows
+    * with an empty cover included) and the rows' summed
+    * `StareJoin.rowBytes`. */
+  private final case class RightSize(cellPairs: Map[Long, Long], rows: Long, bytes: Long) {
+    /** The mean row width, as `StareJoin.approxRowBytes` reads it. */
+    def meanRowBytes: Long = if (rows == 0) 16L else math.max(16L, bytes / rows)
+  }
+
+  /** The one sizing job over a join's right side: one aggregate over
+    * its compressed cover cells, exploded with `posexplode_outer` so a
+    * row with an empty cover still counts once (its position-0 or null
+    * entry carries the row count and width). Widths are measured on the
+    * rows as `collect` returns them (a typed map, not a Row UDF, whose
+    * arrays arrive as a collection type `rowBytes` sizes differently),
+    * so they equal `StareJoin.approxRowBytes` over the collected rows. */
+  private def sizeRight(right: DataFrame, rightSids: String): RightSize = {
+    val sidsIdx = right.schema.fieldIndex(rightSids)
+    val widths = right.map(r => Row(StareJoin.rowBytes(r), r.get(sidsIdx)))(Encoders.row(
+      StructType(Seq(StructField("__w", LongType), right.schema(sidsIdx)))))
+    val first = coalesce(col("__p"), lit(0)) === 0
+    val agg = widths
+      .select(col("__w"), posexplode_outer(stareCompress(col(rightSids))).as(Seq("__p", "__c")))
+      .groupBy(stareClearToOwn(col("__c")).as("__c"))
+      .agg(count(col("__c")), count(when(first, 1)), coalesce(sum(when(first, col("__w"))), lit(0L)))
+      .collect()
+    RightSize(agg.collect { case r if !r.isNullAt(0) => r.getLong(0) -> r.getLong(1) }.toMap,
+      agg.map(_.getLong(2)).sum, agg.map(_.getLong(3)).sum)
+  }
+
+  /** Cells after expanding every cell of a level histogram (level ->
+    * cells) coarser than `target` to `target`; finer cells count as
+    * they are. Saturates at Long.MaxValue: the counts are unbounded and
+    * a wide level spread shifts past 62 bits, so an overflow must read
+    * as an infinite cost, not as a budget pass. */
+  private[operators] def expandedCells(hist: Map[Int, Long], target: Int): Long =
+    hist.foldLeft(0L) { case (acc, (l, n)) =>
+      val shift = 2 * math.max(0, target - l)
+      val cells = if (shift >= 62 || n > (Long.MaxValue >> shift)) Long.MaxValue else n << shift
+      if (cells > Long.MaxValue - acc) Long.MaxValue else acc + cells
+    }
 
   /** Deepest split below a hot cell. */
   private final val MaxExtraLevels = 6
@@ -91,27 +133,30 @@ object Skew {
     * Split depth is capped at the EXACT minimum left-side sid level
     * (one narrow aggregation): a left sid coarser than a split cell
     * would derive no key at the cell's level and silently lose its
-    * match — the cap keeps the rewrite bit-identical for any input. */
+    * match — the cap keeps the rewrite bit-identical for any input.
+    *
+    * The cover cells and their (row, cell) pair counts come from the
+    * right side's one sizing job (`sizeRight`): this entry runs it, and
+    * `shuffleJoin` passes in the measurement it already has. */
   def splitHotCellsWithSpec(left: DataFrame, leftSid: String,
                             right: DataFrame, rightSids: String,
                             maxRowsPerCell: Long, sampleFraction: Double = 0.01,
-                            knownMinLeftLevel: Option[Int] = None): SplitResult = {
-    // per-cell sample counts (cells normalized at own level). The
-    // groupBy also yields the exploded (row, cell) PAIR count — the
-    // quantity the join actually shuffles/broadcasts (a distinct-cell
-    // count under-sizes a many-row cover side sharing few cells).
-    val cellRows = right.select(explode(stareCompress(col(rightSids))).as("c"))
-      .select(stareClearToOwn(col("c")).as("c")).groupBy("c").count().collect()
-    val cells = cellRows.map(_.getLong(0))
-    val rightPairCount = cellRows.map(_.getLong(1)).sum
+                            knownMinLeftLevel: Option[Int] = None): SplitResult =
+    splitSpec(left, leftSid, right, rightSids, sizeRight(right, rightSids), maxRowsPerCell,
+      sampleFraction, knownMinLeftLevel)
+
+  private def splitSpec(left: DataFrame, leftSid: String, right: DataFrame, rightSids: String,
+                        size: RightSize, maxRowsPerCell: Long, sampleFraction: Double,
+                        knownMinLeftLevel: Option[Int]): SplitResult = {
+    // the pair count is the quantity the join actually shuffles or
+    // broadcasts (a distinct-cell count under-sizes a many-row cover
+    // side sharing few cells)
+    val cells = size.cellPairs.keys.toArray
+    val rightPairCount = size.cellPairs.valuesIterator.sum
     val levels = cells.map(Sid.level).distinct.sorted
     // callers that KNOW their point level (e.g. a level-26 indexed
     // table) pass it and skip the exact full-scan guard
-    val minLeftLevel = knownMinLeftLevel.getOrElse(
-      left.agg(min(stareLevel(col(leftSid)))).collect()(0) match {
-        case r if r.isNullAt(0) => Sid.MaxLevel // empty left: cap is irrelevant
-        case r                  => r.getLong(0).toInt
-      })
+    val minLeftLevel = knownMinLeftLevel.getOrElse(StareJoin.minLevel(left, leftSid))
     // persist the (small) sample: phase A and phase B both read it, and
     // an uncached sample re-SCANS THE FULL LEFT SIDE per phase — at any
     // scale the whole point of sampling is to pay the wide scan once
@@ -133,7 +178,7 @@ object Skew {
     def skip(reason: String): SplitResult = {
       sample.unpersist(false)
       System.err.println(s"[skew] split skipped: no projected win — $reason")
-      SplitResult(right, Seq.empty, levels, Some(reason), minLeftLevel, cells)
+      SplitResult(right, Seq.empty, levels, Some(reason), minLeftLevel)
     }
     val spark = left.sparkSession
     val joinConf = JoinConf(spark)
@@ -258,7 +303,7 @@ object Skew {
       canon.flatMap(c => plan.getOrElse(Sid.clearToLevel(c), Seq(Sid.clearToLevel(c))))
     })
     SplitResult(right.withColumn(rightSids, rewriteUdf(col(rightSids))), parents, keptLevels,
-      minLeftLevel = minLeftLevel, allCells = cells)
+      minLeftLevel = minLeftLevel)
   }
 
   /** shuffleJoin's two output shapes, each with its builds. */
@@ -307,6 +352,12 @@ object Skew {
     * `chooseShape` from exact sizes: the full-row keyed join, or the
     * (row id, key) pairs plus a join-back by row id.
     *
+    * The right side is measured once, by the one sizing job
+    * (`sizeRight`): its cell pair counts feed the split spec, the level
+    * histogram (derived on the driver, split included) feeds the rebase
+    * budget and the keyed row count, and its exact row count and mean
+    * row width feed `chooseShape`.
+    *
     * Row ids come from StareJoin.withStableId (packed, deterministic)
     * instead of persist + monotonically_increasing_id: nothing stays
     * cached after the query completes. */
@@ -317,9 +368,9 @@ object Skew {
     // ids first, split-rewrite second: the assembled output carries the
     // ORIGINAL cover rows; only the join-key derivation sees split cells
     val rightRows = StareJoin.withStableId(right, "key_right")
-    val splitRes = splitHot
-      .map(t => splitHotCellsWithSpec(left, leftSid, rightRows, rightSids, t,
-        knownMinLeftLevel = knownMinLeftLevel))
+    val size = sizeRight(rightRows, rightSids)
+    val splitRes = splitHot.map(t => splitSpec(left, leftSid, rightRows, rightSids, size, t,
+      sampleFraction = 0.01, knownMinLeftLevel))
     val rKeySource = splitRes.map(_.right).getOrElse(rightRows)
     // did the rewrite actually run, or did the cost gate skip it?
     val splitApplied = splitRes.exists(_.skipReason.isEmpty)
@@ -336,12 +387,14 @@ object Skew {
       .withColumn("__rk", stareClearToOwn(col("__rs")))
       .select(col("__rid"), col("__rk"))
     val parents = splitRes.map(_.parents).getOrElse(Seq.empty)
-    // level histogram of the keyed right cells: feeds the base level
-    // set AND the uniform-rebase budget in one small job (previously a
-    // distinct-only collect).
-    val levelHist: Map[Int, Long] = rightKeyed
-      .groupBy(stareLevel(col("__rk")).as("__l")).count()
-      .collect().map(r => r.getLong(0).toInt -> r.getLong(1)).toMap
+    // level histogram of the keyed right cells, exactly as the rewrite
+    // UDF emits them: a split parent's pairs move to its one child level,
+    // 4^(child level - parent level) cells each
+    val childLevel = parents.map(p => p.cell -> p.childLevels.head).toMap
+    val levelHist: Map[Int, Long] = size.cellPairs.toSeq.map { case (c, n) =>
+      val l = childLevel.getOrElse(c, Sid.level(c))
+      l -> (n << 2 * (l - Sid.level(c)))
+    }.groupMapReduce(_._1)(_._2)(_ + _)
     val keptLevels: Array[Int] = splitRes.map(_.keptLevels)
       .getOrElse(levelHist.keys.toArray.sorted)
     // ---- uniform-level rebase: the pointJoin dictionary lesson applied
@@ -364,45 +417,26 @@ object Skew {
     // base levels (they can only match left rows at least that fine,
     // which the per-level guard already expresses).
     val rebaseBudget = 16L * 1024 * 1024
-    // saturating cost of expanding every keyed cell below `target` up to
-    // `target` — over ALL levels present in the keyed right frame
-    // (levelHist includes SPLIT-CHILD cells, which the rebase UDF also
-    // expands; budgeting only the kept levels would admit an expansion
-    // orders of magnitude over budget through the children). levelHist
-    // counts exploded (row, cell) pairs (unbounded), and a wide level
-    // spread shifts far past 62 bits — an overflowed (negative) sum must
-    // read as "infinite cost", not as a budget pass.
-    def rebaseCostTo(target: Int): Long =
-      levelHist.keysIterator.filter(_ < target).foldLeft(0L) { (acc, l) =>
-        val shift = 2 * (target - l)
-        val cnt = levelHist.getOrElse(l, 0L)
-        val cellCost =
-          if (shift >= 62 || (shift > 0 && cnt > (Long.MaxValue >> shift))) Long.MaxValue
-          else cnt << shift
-        val sum = acc + cellCost
-        if (sum < acc) Long.MaxValue else sum // addition overflow -> saturate
-      }
+    // cost of expanding every keyed cell below `target` up to `target` —
+    // over ALL levels present in the keyed right frame (levelHist
+    // includes SPLIT-CHILD cells, which the rebase UDF also expands;
+    // budgeting only the kept levels would admit an expansion orders of
+    // magnitude over budget through the children)
+    def rebaseCostTo(target: Int): Long = expandedCells(levelHist.filter(_._1 < target), target)
     // cheapest conceivable rebase: collapse only the two coarsest keyed
     // levels (the smallest shift any useful target could need). If even
     // that exceeds the budget, NO target can pass — skip the min-level
     // fallback scan entirely (it is a full pass over the left sid column)
     val sortedKept = keptLevels.sorted
-    val anyTargetCanFit = sortedKept.length > 1 && {
-      val minimal = rebaseCostTo(sortedKept(1))
-      minimal <= rebaseBudget
-    }
+    val anyTargetCanFit = sortedKept.length > 1 && rebaseCostTo(sortedKept(1)) <= rebaseBudget
     val minLeftLevel: Int = knownMinLeftLevel
       .orElse(splitRes.map(_.minLeftLevel))
       .getOrElse {
         if (!anyTargetCanFit) Sid.MaxLevel // rebase hopeless: cap is moot
-        else left.agg(min(stareLevel(col(leftSid)))).collect()(0) match {
-          case r if r.isNullAt(0) => Sid.MaxLevel
-          case r                  => r.getLong(0).toInt
-        }
+        else StareJoin.minLevel(left, leftSid)
       }
     val target = math.min(if (keptLevels.isEmpty) 0 else keptLevels.max, minLeftLevel)
-    val rebaseCost = rebaseCostTo(target)
-    val rebased = keptLevels.count(_ <= target) > 1 && rebaseCost <= rebaseBudget
+    val rebased = keptLevels.count(_ <= target) > 1 && rebaseCostTo(target) <= rebaseBudget
     val rightKeyedFinal =
       if (!rebased) rightKeyed
       else {
@@ -410,24 +444,13 @@ object Skew {
           if (Sid.level(c) < target) Sid.expandToLevel(Array(c), target) else Array(c))
         rightKeyed.withColumn("__rk", explode(rebase(col("__rk"))))
       }
-    // ---- sizes for the shape and build choice (r6, guide §3.1): the
-    // keyed right side's EXACT row count is already known (levelHist +
-    // the rebase expansion), but its lineage passes through
-    // withStableId's RDD round trip, which erases size stats — Catalyst
-    // would plan EVERY join here as a sort-merge join, even for an 8-row
-    // cover table (measured: 7 SMJs in the q43 plan). The right rows'
-    // width comes from one bounded probe; their count is exact under the
-    // probe size and otherwise bounded by the keyed pair count (every
-    // non-empty cover row emits ≥ 1 pair; empty-cover rows are assumed
-    // rare — they carry no join work).
+    // the keyed right side's exact row count (r6, guide §3.1): its
+    // lineage passes through withStableId's RDD round trip, which erases
+    // size stats — Catalyst would plan EVERY join here as a sort-merge
+    // join, even for an 8-row cover table (measured: 7 SMJs in the q43
+    // plan), so the builds are chosen from these counts instead
     val keyedRightRows: Long =
-      if (!rebased) levelHist.valuesIterator.sum
-      else rebaseCost + levelHist.iterator.collect { case (l, n) if l >= target => n }.sum
-    val probeN = 4096
-    val rightProbe = rightRows.limit(probeN + 1).collect()
-    val rightRowCount: Long =
-      if (rightProbe.length <= probeN) rightProbe.length
-      else math.max(keyedRightRows, rightProbe.length.toLong)
+      if (rebased) expandedCells(levelHist, target) else levelHist.valuesIterator.sum
     // base levels probed unconditionally; split-child levels already in
     // the base set are matched by the base key (no gated duplicate — a
     // duplicate key value would double pairs); levels introduced ONLY
@@ -462,10 +485,9 @@ object Skew {
     // overlap check runs on the driver over the small distinct-cell list.
     val suppressByLevel: Map[Int, Seq[SplitParent]] = splitRes match {
       case Some(sr) if sr.skipReason.isEmpty =>
-        val all = sr.allCells
         val safe = sr.parents.filter { p =>
           val lo = Sid.intervalLo(p.cell); val hi = Sid.intervalHi(p.cell)
-          !all.exists(c => c != p.cell &&
+          !size.cellPairs.keysIterator.exists(c => c != p.cell &&
             Sid.intervalLo(c) < hi && lo < Sid.intervalHi(c))
         }
         baseLevels.toSeq.map { lv =>
@@ -476,14 +498,6 @@ object Skew {
           }
         }.filter(_._2.nonEmpty).toMap
       case _ => Map.empty
-    }
-    if (sys.env.contains("GRAFT_SKEW_DEBUG")) {
-      System.err.println(s"[skewdbg] keptLevels=${keptLevels.mkString(",")} rebased=$rebased " +
-        s"target=$target baseLevels=${baseLevels.mkString(",")} " +
-        s"parents=${parents.map(p => s"${java.lang.Long.toHexString(p.cell)}@L${p.level}->" +
-          p.childLevels.mkString("/")).mkString(";")} " +
-        s"suppress=${suppressByLevel.map { case (l, ps) => s"L$l:${ps.size}" }.mkString(",")} " +
-        s"levelHist=${levelHist.toSeq.sorted.mkString(",")}")
     }
     // candidate keys of a left row: one per base level, then the gated
     // split levels
@@ -512,8 +526,8 @@ object Skew {
     val keyMatch = StareJoin.mixKey(col("__lk")) === StareJoin.mixKey(col("__rk"))
     // AQE's skew-join splitter still handles residual imbalance on the
     // non-broadcast builds
-    chooseShape(JoinConf(left.sparkSession), keyedRightRows, rightRowCount,
-      StareJoin.approxRowBytes(rightProbe), fullRowOk = joinType == "inner" || keys.size == 1) match {
+    chooseShape(JoinConf(left.sparkSession), keyedRightRows, size.rows, size.meanRowBytes,
+      fullRowOk = joinType == "inner" || keys.size == 1) match {
       case FullRow(build, rowsBuild) =>
         // Full-row keyed right (r6, guide §2.3/§8): attach the right ROW
         // COLUMNS to the small keyed side BEFORE the big join (a

@@ -51,7 +51,7 @@ object StareJoin {
     * and each of the 16M bench probes walked a ~7k-entry chain:
     * measured 160 core-seconds (~10 core-µs/row) against 0.28 s for an
     * equal-cardinality dense-key join; fixed, the probe is ~40x cheaper
-    * (joinlab in BenchExtra).
+    * (OPTIMIZATION_r06.md).
     *
     * key ^ (key >>> 31) is invertible (xorshift), null-preserving, and
     * moves every cover level's meaningful bits (positions 5..61) into
@@ -67,6 +67,11 @@ object StareJoin {
     case "left" | "inner" => how
     case other            => throw new IllegalArgumentException(s"how=$other (left|inner)")
   }
+
+  /** The exact minimum sid level of `df`, from one narrow aggregate
+    * job; Sid.MaxLevel when `df` is empty. */
+  private[operators] def minLevel(df: DataFrame, sid: String): Int =
+    df.agg(coalesce(min(stareLevel(col(sid))), lit(Sid.MaxLevel.toLong))).collect()(0).getLong(0).toInt
 
   /** ancestor keys of a sid for the given candidate levels, keeping only
     * levels at or above the sid's own level. */
@@ -152,28 +157,16 @@ object StareJoin {
       val s = r.getSeq[Long](sidsIdx)
       if (s == null) Array.emptyLongArray else Sid.compress(s.toArray)
     }
-    val levels = perRowCells.iterator.flatMap(_.iterator).map(Sid.level).toArray.distinct.sorted
+    val levelHist = perRowCells.iterator.flatMap(_.iterator).map(Sid.level).toSeq
+      .groupMapReduce(identity)(_ => 1L)(_ + _)
     // all covers empty: the dictionary is empty, so inner joins nothing
     // and left pads every row with null right columns
-    val maxLevel = levels.lastOption.getOrElse(0)
+    val maxLevel = if (levelHist.isEmpty) 0 else levelHist.keys.max
     // Expansion cost summed over ROWS, not distinct keys: the dictionary
     // expands the cover per right row, so duplicate covers multiply the
-    // broadcast. Early exit once over budget (also prevents Long
-    // overflow on extreme level spreads).
+    // broadcast.
     val keyBudget = 4L * 1024 * 1024
-    val expansionCost: Long = {
-      var cost = 0L
-      var i = 0
-      while (i < perRowCells.length && cost <= keyBudget) {
-        val cells = perRowCells(i)
-        var j = 0
-        while (j < cells.length && cost <= keyBudget) {
-          cost += 1L << (2 * (maxLevel - Sid.level(cells(j)))); j += 1
-        }
-        i += 1
-      }
-      cost
-    }
+    val expansionCost = Skew.expandedCells(levelHist, maxLevel)
     // A one-level dictionary probes every left row at exactly ONE level,
     // so it is only SOUND when every left sid is at least as fine as the
     // finest cover cell: a left row with level in [cellLevel, maxLevel)
@@ -185,14 +178,10 @@ object StareJoin {
     // nothing — one narrow column-pruned agg job over the left sid
     // column does; the shuffle join reuses its answer.
     val minLeftLevel: Option[Int] =
-      if (levels.length <= 1 || expansionCost > keyBudget) knownMinLeftLevel
-      else knownMinLeftLevel.orElse(Some(
-        left.agg(min(stareLevel(col(leftSid)))).collect()(0) match {
-          case r if r.isNullAt(0) => Sid.MaxLevel // empty left
-          case r                  => r.getLong(0).toInt
-        }))
+      if (levelHist.size <= 1 || expansionCost > keyBudget) knownMinLeftLevel
+      else knownMinLeftLevel.orElse(Some(minLevel(left, leftSid)))
     val dictSafe = expansionCost <= keyBudget &&
-      (levels.length <= 1 || minLeftLevel.exists(_ >= maxLevel))
+      (levelHist.size <= 1 || minLeftLevel.exists(_ >= maxLevel))
     // a BYTE cap on expansionCost x measured row width too: a fat cover
     // side (wide payload columns, big sid arrays) duplicated per
     // expanded cell would otherwise build a multi-GB broadcast
@@ -236,22 +225,28 @@ object StareJoin {
       Build.Broadcast)
   }
 
-  /** Rough in-memory width of a collected row (bytes) — drives the
-    * dictionary-plan byte budget. Samples <= ~100 rows evenly. */
-  private[operators] def approxRowBytes(rows: Array[org.apache.spark.sql.Row]): Long = {
-    if (rows.isEmpty) return 16L
+  /** Rough in-memory width of one row (bytes): the per-row figure every
+    * build size in the join family is measured with. */
+  private[operators] def rowBytes(row: Row): Long = {
     def sz(v: Any): Long = v match {
       case null          => 8L
       case s: String     => 40L + 2L * s.length
       case a: Seq[_]     => 40L + a.iterator.map(sz).sum
       case a: Array[_]   => 40L + a.iterator.map(sz).sum
       case m: Map[_, _]  => 48L + m.iterator.map { case (k, w) => sz(k) + sz(w) }.sum
-      case r: org.apache.spark.sql.Row => 16L + r.toSeq.iterator.map(sz).sum
+      case r: Row        => rowBytes(r)
       case _             => 8L
     }
+    16L + row.toSeq.iterator.map(sz).sum
+  }
+
+  /** Mean `rowBytes` of collected rows — drives the dictionary-plan
+    * byte budget. Samples <= ~100 rows evenly. */
+  private[operators] def approxRowBytes(rows: Array[Row]): Long = {
+    if (rows.isEmpty) return 16L
     val step = math.max(1, rows.length / 100)
     val sampled = rows.indices.by(step).map(rows(_))
-    math.max(16L, sampled.iterator.map(r => 16L + r.toSeq.iterator.map(sz).sum).sum / sampled.length)
+    math.max(16L, sampled.iterator.map(rowBytes).sum / sampled.length)
   }
 
   /** Stable, deterministic row ids, packed (partition << 40 | pos):

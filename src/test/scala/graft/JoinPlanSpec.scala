@@ -1,12 +1,15 @@
 package graft
 
+import org.apache.spark.graft.Bus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildSide}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
+import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec, ShuffledHashJoinExec,
+  SortMergeJoinExec}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -68,6 +71,25 @@ class JoinPlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     assert(found.size == 1, s"expected one join on $lk:\n$plan")
     found.head
+  }
+
+  /** Every join with a key on column `c`. */
+  private def joinsOn(df: DataFrame, c: String): Seq[BaseJoinExec] = initial(df).collect {
+    case j: BaseJoinExec if (j.leftKeys ++ j.rightKeys).exists(_.references.exists(_.name == c)) => j
+  }
+
+  /** Jobs launched while `body` runs, read after the listener bus has
+    * delivered every event. */
+  private def jobsDuring(body: => Any): Int = {
+    val sc = spark.sparkContext
+    Bus.drain(sc)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try { body; Bus.drain(sc); jobs.get }
+    finally sc.removeSparkListener(listener)
   }
 
   // --------------------------------------------------------- fixtures
@@ -213,5 +235,55 @@ class JoinPlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(kj.buildCols == Set("__rid", "__rk"), initial(joined).toString)
     assert(observedPairs(joined) ===
       expectedPairs(left, Seq(("r3", Seq(s3)), ("r4", Seq(s4)), ("r6", Seq(s6))), "left"))
+  }
+
+  test("a shuffleJoin call measures its right side in one job: 7, 2 and 2 jobs before execution") {
+    import spark.implicits._
+    // the shufflejoin shape: 200 level-8 cells plus a level-6 city
+    // cover, 90% of the points in the city
+    val cells = Sid.expandToLevel(Sid.compress(Cover.coverFromBox(-180.0, 0.0, -40.0, 40.0, 4)), 8)
+      .take(200)
+    val city = Cover.coverFromBox(11.0, 15.0, 50.0, 54.0, 6)
+    val covers = ((-1L, city.toSeq) +: cells.toSeq.zipWithIndex.map { case (c, i) => (i.toLong, Seq(c)) })
+      .toDF("cover_id", "sids")
+    val pts = points(2000, hot = 0.9).select(col("lid"), col("sid"))
+    val (split, unsplit) = withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.graft.skew.splitOverheadSec" -> "0") {
+      assert(Skew.splitHotCellsWithSpec(pts, "sid", covers, "sids", 200L,
+        knownMinLeftLevel = Some(26)).skipReason.isEmpty, "the split gate must engage")
+      (jobsDuring(Skew.shuffleJoin(pts, "sid", covers, "sids", splitHot = Some(200L),
+          knownMinLeftLevel = Some(26))),
+        jobsDuring(Skew.shuffleJoin(pts, "sid", covers, "sids", knownMinLeftLevel = Some(26))))
+    }
+    val q43 = jobsDuring(Skew.shuffleJoin(points(1000), "sid", SparkEntry.coversDf(spark), "sids",
+      how = "left", knownMinLeftLevel = Some(26)))
+    assert((split, unsplit, q43) === ((7, 2, 2)), "(split, unsplit, q43-shaped) jobs per call")
+  }
+
+  test("empty-cover rows count toward the row build: 20k padded cover rows are not broadcast") {
+    import spark.implicits._
+    // the multi-key left fixture, padded with empty covers to 20k rows
+    // of ~1.1 KB each: ~22 MB of rows to join back, over the 10 MB
+    // broadcast threshold
+    val s3 = Sid.clearToLevel(Htm.latLonToSid(10.0, 10.0, 3))
+    val s4 = Sid.clearToLevel(Htm.latLonToSid(50.0, 100.0, 4))
+    val s6 = Sid.clearToLevel(Htm.latLonToSid(-40.0, -60.0, 6))
+    val covers = Seq(("r3", Seq(s3)), ("r4", Seq(s4)), ("r6", Seq(s6))) ++
+      (0 until 19997).map(i => (s"pad$i", Seq.empty[Long]))
+    val payload = "x" * 500
+    val rightDf = covers.map { case (n, c) => (n, c, payload) }.toDF("rname", "sids", "payload")
+    val left = Seq((1L, Htm.latLonToSid(10.1, 10.1, 26)), (2L, Htm.latLonToSid(-40.1, -60.05, 26)),
+      (3L, Htm.latLonToSid(0.0, 170.0, 26)), (4L, Sid.clearToLevel(Htm.latLonToSid(10.2, 10.2, 5))))
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "10485760") {
+      // left takes the pair shape, inner the full-row shape; both join
+      // the right rows back by key_right
+      for (how <- Seq("left", "inner")) {
+        val joined = Skew.shuffleJoin(left.toDF("lid", "sid"), "sid", rightDf, "sids", how = how)
+        val back = joinsOn(joined, "key_right")
+        assert(back.nonEmpty && back.forall(!_.isInstanceOf[BroadcastHashJoinExec]),
+          s"how=$how: ~22 MB of cover rows broadcast:\n${initial(joined)}")
+        assert(observedPairs(joined) === expectedPairs(left, covers, how), s"how=$how")
+      }
+    }
   }
 }
